@@ -3,8 +3,6 @@
 Usage: python scripts/check_queries.py [sf_dir] name1 name2 ...
 Mirrors driver_sim's canonicalization exactly (column-sorted value hash).
 """
-import hashlib
-import json
 import os
 import sys
 
@@ -13,6 +11,7 @@ import duckdb
 from pyspark.sql import SparkSession
 
 from cudf_spark.queries import REGISTRY
+from tests.conftest import vhash
 
 args = sys.argv[1:]
 sf = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
@@ -31,13 +30,6 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     con.execute(
         f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
     )
-
-
-def vhash(cols, rows):
-    cols = list(cols)
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
-    return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
 
 
 bad = 0

@@ -39,12 +39,10 @@ SF_DEFAULT = "/root/testdata/sf0.01"
 
 
 def worker(nparts: int, sf: str) -> int:
-    import hashlib
-    import json
-
     from pyspark.sql import SparkSession
 
     from cudf_spark.queries import REGISTRY
+    from tests.conftest import vhash
 
     # Layout 2 also changes the MASTER core count (ADVICE r09): all-
     # local[4] layouts cannot see a dependence on defaultParallelism —
@@ -67,12 +65,6 @@ def worker(nparts: int, sf: str) -> int:
         ).config("spark.sql.session.timeZone", "America/New_York")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def vhash(cols, rows):
-        cols = list(cols)
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
-        return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
 
     for name, q in sorted(REGISTRY.items()):
         try:

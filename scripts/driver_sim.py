@@ -1,9 +1,11 @@
 """Simulates the spark-graft driver: smoke entry() + oracle-compare every query."""
-import sys, json, hashlib
+import sys
 sys.path.insert(0, "/root/repo")
 import duckdb
 import __spark_entry__ as mod
 from pyspark.sql import SparkSession
+
+from tests.conftest import vhash
 
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions","4")
@@ -24,22 +26,12 @@ con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
-def vhash(cols, rows):
-    cols = list(cols); order = sorted(range(len(cols)), key=lambda i: cols[i])
-    norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
-    return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
-
 qs, oracles = mod.queries(), mod.oracle_sql()
-# Optional subset (round-boundary smoke): DRIVER_SIM_ONLY="@pins" runs the
-# latest JUDGE_PINS cohort; or a comma-separated name list. Default (unset)
-# is the full registry, exactly as the driver runs it.
+# Optional subset: DRIVER_SIM_ONLY is a comma-separated name list. Default
+# (unset) is the full registry, exactly as the driver runs it.
 only = os.environ.get("DRIVER_SIM_ONLY", "").strip()
 if only:
-    if only == "@pins":
-        from cudf_spark.queries import JUDGE_PINS
-        names = JUDGE_PINS[max(JUDGE_PINS)]
-    else:
-        names = set(only.split(","))
+    names = set(only.split(","))
     unknown = names - set(qs)
     assert not unknown, f"DRIVER_SIM_ONLY names not in queries(): {unknown}"
     qs = {n: f for n, f in qs.items() if n in names}

@@ -18,7 +18,7 @@ re-expressed for this repo's differential gate: per seed,
      1-row groups, duplicate order keys, heavy-tailed doc lengths,
      skewed group keys, null injection;
   2. run the driver's own comparator (Spark result vs DuckDB oracle,
-     column-sorted value hash — scripts/driver_sim.py:27) over a
+     column-sorted value hash — tests/conftest.py:vhash) over a
      seed-rotated cohort of oracle-backed registry queries;
   3. exit non-zero on any MISMATCH or error, with a per-seed JSON
      report under .fuzz/.
@@ -27,7 +27,6 @@ Usage:
     python scripts/fuzz_differential.py                  # seeds 1-5, cohort 80
     python scripts/fuzz_differential.py --seeds 7,8 --cohort 120
     python scripts/fuzz_differential.py --only ewma_per_user --seeds 3
-    FUZZ_SEEDS=2 bash scripts/round_start.sh             # optional stage
 
 The generated trees live under .fuzz/seed{N}/ (gitignored) and are
 deleted on success unless --keep is given.
@@ -43,7 +42,6 @@ skew, duplication, emptiness — is fair game per seed.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import shutil
@@ -288,29 +286,14 @@ def gen_fixture(seed: int, outdir: str,
     return knobs
 
 
-def vhash(cols, rows) -> str:
-    """Byte-for-byte the driver comparator (scripts/driver_sim.py:27)."""
-    cols = list(cols)
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
-    return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
-
-
 def cohort_for_seed(names: list[str], seed: int, size: int) -> list[str]:
     """Seed-rotated cohort: a seeded shuffle of the full oracle-backed
     registry, first `size` names — across consecutive seeds the overlap
-    decays, so ≥5 seeds sweep well past 100 distinct queries. The latest
-    JUDGE_PINS cohort is always appended (highest-churn queries)."""
-    from cudf_spark.queries import JUDGE_PINS
-
+    decays, so ≥5 seeds sweep well past 100 distinct queries."""
     rng = np.random.default_rng(10_000 + seed)
     shuffled = list(names)
     rng.shuffle(shuffled)
-    cohort = shuffled[:size]
-    for pin in sorted(JUDGE_PINS[max(JUDGE_PINS)]):
-        if pin in names and pin not in cohort:
-            cohort.append(pin)
-    return cohort
+    return shuffled[:size]
 
 
 def run_seed(spark, seed: int, size: int, keep: bool,
@@ -324,6 +307,7 @@ def run_seed(spark, seed: int, size: int, keep: bool,
     knobs = gen_fixture(seed, fuzz_dir, knob_overrides)
 
     from cudf_spark.queries import REGISTRY
+    from tests.conftest import vhash
 
     oracle_backed = sorted(
         n for n, q in REGISTRY.items() if q.oracle is not None)

@@ -8,6 +8,8 @@ anything short of exact equality there is a failure here too).
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import os
 import sys
@@ -83,6 +85,15 @@ def rows_from_duck(con, sql):
     cols_sorted = [cols[i] for i in order]
     data = [tuple(_norm_cell(row[i]) for i in order) for row in raw]
     return cols_sorted, sorted(data, key=lambda t: tuple((x is None, str(x)) for x in t))
+
+
+def vhash(cols, rows):
+    """The driver's comparator: md5[:12] of the ``str()`` cells, columns
+    sorted by name, rows sorted."""
+    cols = list(cols)
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
+    return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
 
 
 def assert_parity(spark, duck, query, max_show: int = 8):

@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import types as T
 
 from cudf_spark.queries import REGISTRY
-from tests.conftest import SF_DIR
+from tests.conftest import REPO, SF_DIR
 
 FORBIDDEN = (T.ArrayType, T.MapType, T.StructType)
 
@@ -39,4 +39,20 @@ def test_scalar_output_contract(spark, name):
         f"{name} exposes non-scalar top-level columns ({', '.join(bad)}); "
         "the driver canonicalizer cannot hash collection cells — "
         "concat_ws/array_to_string them on both engines"
+    )
+
+
+def test_readme_registry_count_matches():
+    """README's shop-window counts must track len(REGISTRY) — VERDICT r05
+    item 6 (line 18 said 181 while the registry held 387)."""
+    import re
+
+    with open(f"{REPO}/README.md") as fh:
+        text = fh.read()
+    oracle_backed = sum(1 for q in REGISTRY.values() if q.oracle is not None)
+    m = re.search(r"registry: (\d+) named queries, (\d+) paired", text)
+    assert m, "README layout line about the registry is missing"
+    assert (int(m.group(1)), int(m.group(2))) == (
+        len(REGISTRY),
+        oracle_backed,
     )
